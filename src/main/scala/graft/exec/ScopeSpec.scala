@@ -43,13 +43,12 @@ object ScopeSpec {
     exec
   }
 
-  /** Per-connection executor bootstrap shared by both network servers
-    * ([[graft.server.SqlServer]], [[graft.server.PgWireServer]]): the
-    * optional scope spec runs first (connect-time `setup` parity with
-    * the reference dialect), then the static scope map rides on top.
-    * Throws on a bad spec — each server answers the client in its own
-    * protocol and closes (never leave the socket silently open: that
-    * was the r6 SqlServer hang bug). */
+  /** Per-connection executor bootstrap for [[graft.server.PgWireServer]]:
+    * the optional scope spec runs first (connect-time `setup` parity
+    * with the reference dialect), then the static scope map rides on
+    * top. Throws on a bad spec — the server answers the client with an
+    * ErrorResponse and closes (never leave the socket silently open: a
+    * client blocked on its first read would hang). */
   def bootstrap(spark: SparkSession,
       scope: Map[String, org.apache.spark.sql.DataFrame],
       scopeSpecPath: Option[String]): Executor =

@@ -600,9 +600,20 @@ object Similarity {
   /** Load the driver-local model back from [[buildIvfPqIndex]] output.
     * nCells + m × codebookSize rows in ONE read+collect — a
     * constant-size driver read, the same class of work as evaluating
-    * constant table-function args. */
+    * constant table-function args. An index from before the single-model
+    * layout (separate `cells/` and `books/` tables, no `model/`) is not
+    * read: it fails with an error that says to rebuild it. */
   private[graft] def loadIvfPqModel(spark: SparkSession, path: String): IvfPqModel = {
-    val rows = spark.read.parquet(s"$path/model").collect()
+    val modelPath = new org.apache.hadoop.fs.Path(s"$path/model")
+    if (!modelPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(modelPath))
+      throw new IllegalStateException(
+        s"IVF-PQ index at $path has no model/ table. Indexes now keep " +
+          "cells and codebooks in one model/ table instead of the older " +
+          "separate cells/ and books/ tables; an index in the old layout " +
+          "(or no index at all) cannot be loaded. Rebuild it with " +
+          "buildIvfPqIndex.")
+    val rows = spark.read.parquet(modelPath.toString).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
         r.getSeq[Double](3).toArray))
     val cells = rows.filter(_._1 == 0).sortBy(_._2).map(_._4)

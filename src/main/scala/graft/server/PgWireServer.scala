@@ -42,15 +42,17 @@ import graft.exec.Executor
   * literals, NULL as the -1 length sentinel) and honest type OIDs for
   * the scalar types, so clients parse values correctly.
   *
-  * Sessionful like [[SqlServer]]: one Executor per connection (CREATE
-  * TABLE AS persists across statements on the connection, connections
-  * are isolated). Driver-side materialization is capped at
-  * `defaultMaxRows` with a NOTICE on truncation — at 100 TB a client
-  * fetch must be an aggregate or LIMIT-ed slice; bulk export is COPY TO
-  * (distributed part-files, returns only a tag).
+  * Sessionful: one Executor per connection, bootstrapped from the
+  * optional scope spec (CREATE TABLE AS persists across statements on
+  * the connection, connections are isolated). Driver-side
+  * materialization is capped at `defaultMaxRows` with a NOTICE on
+  * truncation — at 100 TB a client fetch must be an aggregate or
+  * LIMIT-ed slice; bulk export is COPY TO (distributed part-files,
+  * returns only a tag).
   *
   * SECURITY: auth is TRUST (AuthenticationOk unconditionally), so the
-  * socket binds loopback by default, same policy as [[SqlServer]].
+  * socket binds loopback by default; `bindAddress` opts into another
+  * interface.
   */
 final class PgWireServer(spark: SparkSession,
     scope: Map[String, DataFrame] = Map.empty,
@@ -482,8 +484,8 @@ final class PgWireServer(spark: SparkSession,
         s"pgwire connection $pid", interruptOnCancel = true)
       send(out, 'K') { b => b.writeInt(pid); b.writeInt(secret) }
 
-      // one executor session per connection (shared bootstrap with
-      // SqlServer; a failure answers the client, then closes)
+      // one executor session per connection (a bootstrap failure
+      // answers the client, then closes)
       val exec = try {
         graft.exec.ScopeSpec.bootstrap(spark, scope, scopeSpecPath)
       } catch {
@@ -684,10 +686,10 @@ final class PgWireServer(spark: SparkSession,
         sendError(out, d.getMessage, "08P01")
         out.flush()
         throw d
-      // NonFatal only (SqlServer policy): a fatal JVM error propagates
-      // out of this per-connection daemon thread instead of masquerading
+      // NonFatal only: a fatal JVM error propagates out of this
+      // per-connection daemon thread instead of masquerading
       // as a SQL error. By itself that only kills the thread — the
-      // standalone entry points install [[FatalErrorHalt]] so it halts
+      // standalone entry point installs [[FatalErrorHalt]] so it halts
       // the whole process rather than leaving a corrupted JVM serving
       // other connections.
       case scala.util.control.NonFatal(e) =>
@@ -1625,6 +1627,31 @@ final class PgWireServer(spark: SparkSession,
   }
 }
 
+/** Process-wide backstop for the standalone server: the per-connection
+  * handlers catch NonFatal only, so a fatal JVM error (OutOfMemoryError,
+  * LinkageError, …) propagates out of its daemon thread — which by
+  * default kills just that thread and leaves the rest of the JVM serving
+  * connections in potentially corrupted state. The server is a
+  * long-lived multi-connection process, so the correct policy is
+  * fail-fast: halt the whole process. Installed by [[PgServeMain]] only
+  * — embedded/test usage keeps the default (a fatal error in a test
+  * surfaces as a test failure, not a JVM halt). */
+object FatalErrorHalt {
+  def install(): Unit =
+    Thread.setDefaultUncaughtExceptionHandler { (t: Thread, e: Throwable) =>
+      if (!scala.util.control.NonFatal(e)) {
+        System.err.println(
+          s"FATAL error in thread ${t.getName}: $e — halting process")
+        e.printStackTrace(System.err)
+        // halt, not exit: shutdown hooks could deadlock in a broken JVM
+        Runtime.getRuntime.halt(1)
+      } else {
+        System.err.println(s"uncaught exception in thread ${t.getName}: $e")
+        e.printStackTrace(System.err)
+      }
+    }
+}
+
 /** Standalone entry point:
   * `runMain graft.server.PgServeMain [scopeSpec.json] [port] [bindAddr]`
   * — e.g. `psql -h 127.0.0.1 -p <port> -c 'select 1 + 1'` connects
@@ -1644,6 +1671,8 @@ object PgServeMain {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions",
+        "org.apache.spark.sql.graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = new PgWireServer(spark, port = port, scopeSpecPath = spec,

@@ -491,8 +491,11 @@ final case class CountInSet(child: Expression, words: Seq[String])
   * codegen'd loop over a shared compiled Pattern). Value-identical to
   * the lambda form: `trimFirst` applies UTF8String.trim (ASCII space
   * only — exactly Spark's trim()), the match is Matcher.find (exactly
-  * RLIKE's semantics), null elements never count, a NULL array answers
-  * NULL (as size(filter(NULL)) does under ANSI). The Pattern compiles
+  * RLIKE's semantics), null elements never count, and a NULL array
+  * answers NULL. That last match holds only while
+  * `spark.sql.legacy.sizeOfNull` is false (or ANSI mode overrides it):
+  * under the legacy setting size(filter(NULL)) is -1, not NULL. The
+  * Pattern compiles
   * once per (driver, executor) and ships by reference into the
   * generated code; Pattern is thread-safe (each call gets its own
   * Matcher). */

@@ -218,16 +218,10 @@ class ConformanceSpec extends AnyFunSuite {
           |select cast(count(1) as bigint) as cnt from r""".stripMargin,
         Seq(Seq(11L)))
       spark.sparkContext.parallelize(Seq(1), 1).count() // flush listener bus
-      // the listener bus is async: poll until the count is STABLE across
-      // two consecutive sleeps (r19 ADVICE — a `< 1` wait was satisfied
-      // by the recursion's own jobs long before the sentinel delivered,
-      // so the upper-bound assert could undercount and pass spuriously)
-      val deadline = System.currentTimeMillis() + 10000
-      var prev = -1
-      while (prev != jobs.get() && System.currentTimeMillis() < deadline) {
-        prev = jobs.get()
-        Thread.sleep(100)
-      }
+      // the listener bus is async: drain it so every job start, the
+      // sentinel's included, has reached the listener before the read
+      // (a poll could read early, undercount, and pass spuriously)
+      org.apache.spark.sql.graft.ListenerBusProbe.drain(spark)
       val n = jobs.get() - 1 // minus the sentinel
       assert(n <= 85, s"mod-11 recursion ran $n jobs (expected ~64: " +
         "3 actions per no-repeat iteration; the pre-r19 shape ran 116)")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark Connect round-trip — the modern remote-access path to a Spark
   * cluster (SURVEY §7.4: the reference's SQLAlchemy/DBAPI role is
-  * covered by the JSON-lines + PG wire servers; Connect is the
+  * covered by the Postgres wire server; Connect is the
   * Spark-native equivalent). Rounds 1–11 documented this as an
   * environment blocker (no client jar in the sandbox); the round-12
   * re-probe found the 4.1.2 client jars under

@@ -344,6 +344,21 @@ class OperatorsSpec extends AnyFunSuite {
     assert(inc.toSet == ref.toSet, "append diverged from same-model rebuild")
   }
 
+  test("IVF-PQ index in the old cells/books layout fails with a rebuild message") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_old").toString
+    // the layout written before the single model/ table: codes plus
+    // separate cells/ and books/ tables
+    Seq((0, 0)).toDF("id", "__cell").write.parquet(s"$dir/codes")
+    Seq((0, Seq(0.0))).toDF("cell", "centroid").write.parquet(s"$dir/cells")
+    Seq((0, 0, Seq(0.0))).toDF("sub", "code", "centroid")
+      .write.parquet(s"$dir/books")
+    val q = Seq((0L, Seq(0.0))).toDF("vec_id", "vec")
+    val e = intercept[IllegalStateException](
+      Similarity.knnIvfPqIndexed(spark, dir, q, k = 1))
+    assert(e.getMessage.contains("cells/ and books/"))
+    assert(e.getMessage.contains("Rebuild it with buildIvfPqIndex"))
+  }
+
   test("IVF-PQ compaction: one file per cell, content preserved") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_cmp").toString

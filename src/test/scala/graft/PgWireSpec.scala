@@ -26,14 +26,15 @@ class PgWireSpec extends AnyFunSuite {
     private val out = new DataOutputStream(
       new BufferedOutputStream(sock.getOutputStream))
 
-    def startup(): Seq[Msg] = {
+    def startup(): Seq[Msg] = { sendStartup(); readUntilReady() }
+
+    def sendStartup(): Unit = {
       val params = "user\u0000test\u0000database\u0000test\u0000\u0000"
         .getBytes(StandardCharsets.UTF_8)
       out.writeInt(8 + params.length)
       out.writeInt(196608)
       out.write(params)
       out.flush()
-      readUntilReady()
     }
 
     def sslProbe(): Char = {
@@ -68,13 +69,10 @@ class PgWireSpec extends AnyFunSuite {
       var gotG = false
       var done = false
       while (!done) {
-        val t = in.readByte().toChar
-        val len = in.readInt()
-        val body = new Array[Byte](len - 4)
-        in.readFully(body)
-        pre += Msg(t, body)
-        if (t == 'G') { gotG = true; done = true }
-        if (t == 'Z') done = true
+        val m = readMsg()
+        pre += m
+        if (m.tag == 'G') { gotG = true; done = true }
+        if (m.tag == 'Z') done = true
       }
       if (!gotG) pre.result()
       else {
@@ -163,14 +161,21 @@ class PgWireSpec extends AnyFunSuite {
       try {
         var done = false
         while (!done) {
-          val t = in.readByte().toChar
-          val len = in.readInt()
-          val body = new Array[Byte](len - 4)
-          in.readFully(body)
-          msgs += Msg(t, body)
-          if (t == 'Z' || t == 'E') done = true
+          val m = readMsg()
+          msgs += m
+          if (m.tag == 'Z' || m.tag == 'E') done = true
         }
       } catch { case _: java.io.IOException => /* server closed */ }
+      msgs.result()
+    }
+
+    /** Every message until the server closes the socket; a server that
+      * stays silent for a minute fails with SocketTimeoutException. */
+    def readUntilClosed(): Seq[Msg] = {
+      sock.setSoTimeout(60000)
+      val msgs = Seq.newBuilder[Msg]
+      try while (true) msgs += readMsg()
+      catch { case _: java.io.EOFException => /* server closed */ }
       msgs.result()
     }
 
@@ -178,14 +183,19 @@ class PgWireSpec extends AnyFunSuite {
       val msgs = Seq.newBuilder[Msg]
       var done = false
       while (!done) {
-        val tag = in.readByte().toChar
-        val len = in.readInt()
-        val body = new Array[Byte](len - 4)
-        in.readFully(body)
-        msgs += Msg(tag, body)
-        if (tag == 'Z') done = true
+        val m = readMsg()
+        msgs += m
+        if (m.tag == 'Z') done = true
       }
       msgs.result()
+    }
+
+    private def readMsg(): Msg = {
+      val tag = in.readByte().toChar
+      val len = in.readInt()
+      val body = new Array[Byte](len - 4)
+      in.readFully(body)
+      Msg(tag, body)
     }
 
     override def close(): Unit = sock.close()
@@ -790,6 +800,97 @@ class PgWireSpec extends AnyFunSuite {
       val after = c.query("select 1 as x")
       assert(after.exists(m => m.tag == 'D' &&
         dataRow(m) == Seq(Some("1"))))
+    }
+  }
+
+  test("sessions are isolated across connections") {
+    withServerAndPort { (c1, port) =>
+      c1.startup()
+      c1.query("create table mine as select id + 10 as id from fixtures")
+      val c2 = new WireClient(port)
+      try {
+        c2.startup()
+        // c2 must not see c1's scope mutation
+        val err = c2.query("select * from mine")
+        assert(err.exists(m => m.tag == 'E' &&
+          str(m.body).toLowerCase.contains("mine")), err.map(_.tag))
+      } finally c2.close()
+      val own = c1.query("select count(*) as n from mine")
+      assert(dataRow(own.find(_.tag == 'D').get) == Seq(Some("3")))
+    }
+  }
+
+  test("concurrent clients execute safely in parallel") {
+    withServerAndPort { (_, port) =>
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val threads = (1 to 4).map { i =>
+        val t = new Thread(null, () => {
+          try {
+            val c = new WireClient(port)
+            try {
+              c.startup()
+              (1 to 5).foreach { _ =>
+                c.parseStmt("", "select sum(id) as s from fixtures where id <= $1",
+                  oids = Seq(23))
+                c.bind("", "", params = Seq(Some(i.toString)))
+                c.executePortal("")
+                val rows = c.sync().filter(_.tag == 'D').map(dataRow)
+                val want = (1 to math.min(i, 3)).sum.toString
+                if (rows != Seq(Seq(Some(want))))
+                  throw new AssertionError(s"client $i got $rows")
+              }
+            } finally c.close()
+          } catch { case e: Throwable => errs.add(e) }
+        }, s"client-$i")
+        t.start(); t
+      }
+      threads.foreach(_.join(60000))
+      assert(threads.forall(!_.isAlive), "client thread timed out")
+      assert(errs.isEmpty, s"client errors: $errs")
+    }
+  }
+
+  test("scope-spec bootstrap runs tables and setup per connection") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pg_spec")
+    Seq((1, "x"), (2, "y")).toDF("id", "s")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    java.nio.file.Files.writeString(dir.resolve("scope.json"),
+      s"""{"tables": {"t": "t.parquet"},
+         | "setup": ["create table doubled as select id * 2 as id2 from t"]}"""
+        .stripMargin)
+    val server = new PgWireServer(spark,
+      scopeSpecPath = Some(s"$dir/scope.json"))
+    try (1 to 2).foreach { _ =>
+      val c = new WireClient(server.boundPort)
+      try {
+        c.startup()
+        val rows = c.query("select id2 from doubled order by id2")
+          .filter(_.tag == 'D').map(dataRow)
+        assert(rows == Seq(Seq(Some("2")), Seq(Some("4"))))
+      } finally c.close()
+    } finally server.close()
+  }
+
+  test("scope-spec bootstrap failure answers with an error, then closes") {
+    val server = new PgWireServer(spark,
+      scopeSpecPath = Some("/nonexistent/scope.json"))
+    val c = new WireClient(server.boundPort)
+    try {
+      c.sendStartup()
+      val msgs = c.readUntilClosed()
+      assert(msgs.exists(m => m.tag == 'E' && str(m.body).contains("bootstrap")),
+        msgs.map(_.tag))
+      assert(!msgs.exists(_.tag == 'Z'), "no ReadyForQuery after a failed bootstrap")
+    } finally { c.close(); server.close() }
+  }
+
+  test("duplicate result column names stay positional") {
+    withServer() { c =>
+      c.startup()
+      val msgs = c.query("select id as k, s as k from fixtures where id = 1")
+      assert(rowDesc(msgs.find(_.tag == 'T').get).map(_._1) == Seq("k", "k"))
+      assert(msgs.filter(_.tag == 'D').map(dataRow) ==
+        Seq(Seq(Some("1"), Some("a"))))
     }
   }
 
