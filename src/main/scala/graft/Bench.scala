@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract benchmark: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -44,8 +42,8 @@ object Bench {
       times: Vector[Double], suspect: Boolean, drift: Boolean,
       err: Option[String], isolated: Boolean = false)
 
-  /** Spark's per-job fixed cost on this class of host (FloorProbe:
-    * a bare `range(1).count()` medians ~0.15 s warm): timings at or
+  /** Spark's per-job fixed cost on this class of host (a bare
+    * `range(1).count()` medians ~0.15 s warm): timings at or
     * under it are all scheduling noise, so relative-spread heuristics
     * must not fire on them. */
   val schedulingFloor = 0.15
@@ -122,8 +120,8 @@ object Bench {
     // suspect reflects the FINAL warm spread — drift reruns that expose
     // a fast mode (e.g. all-slow initial window + recovered reruns) must
     // surface as spread, not vanish because the flag was frozen earlier.
-    // Times at or under Spark's per-job scheduling floor (~0.15 s
-    // measured by FloorProbe) spread freely from pure scheduling noise —
+    // Times at or under Spark's per-job scheduling floor (~0.15 s for a
+    // bare range(1).count()) spread freely from pure scheduling noise —
     // a query that cheap is never load-suspect, whatever its ratio.
     val suspect = runs > 1 && spread > 2.0 && warm.max > schedulingFloor
     val p50 = median(warm)
@@ -142,8 +140,8 @@ object Bench {
     * settled), buying up to `budget` extra runs until the timing
     * CONVERGES: the isolation window is self-consistent (spread ≤ 1.5×)
     * and the fastest-3-warm median lands within 30% of the warm
-    * minimum — i.e. the recorded p50 now matches what a standalone
-    * TimeOne run measures. A converged query is HEALED (suspect/drift
+    * minimum — i.e. the recorded p50 now matches what the query measures
+    * timed alone. A converged query is HEALED (suspect/drift
     * cleared); one that never converges stays flagged so the reader
     * falls back to `mins`. Either way `isolated = true` records that
     * the pass ran. Unflagged or failed timings pass through untouched. */
@@ -273,17 +271,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus)
+      .appName("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warm-up outside the timed region

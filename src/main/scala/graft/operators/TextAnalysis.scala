@@ -255,8 +255,9 @@ object TextAnalysis {
     * (`chars·100 ≤ t100·total`), so both engines agree bit-for-bit with
     * no float division anywhere.
     *
-    * Scale shape (r20): the token arrays are hash-partitioned by doc_id
-    * ONCE up front — the only corpus-sized exchange. All nine gram
+    * Scale shape: the gram leg's token arrays are hash-partitioned by
+    * doc_id — the only corpus-sized exchange; the census leg (one row
+    * per document) reads the corpus without one. All nine gram
     * sizes assemble map-side from `element_at` indexing (fully codegen,
     * no lead() window, no interpreted map_filter), and both downstream
     * aggregations are keyed by supersets of doc_id, so they run on the
@@ -274,20 +275,19 @@ object TextAnalysis {
 
   def gopherNgramStats(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     val ns = gopherNgramThresholds.keys.toSeq.sorted
-    // the ONE corpus exchange: token arrays keyed by doc_id. The census
-    // subtree and the gram subtree share this exchange (ReuseExchange),
-    // so the corpus is scanned and tokenized once; the gram census and
-    // (doc, n) reduce both cluster by doc_id-supersets and reuse the
-    // partitioning instead of shuffling 9× the corpus in gram strings.
-    val withToks = docs.select(
-      (col("doc_id") +: keep.map(col)) :+ tokens(col("text")).as("toks"): _*)
-      .repartition(col("doc_id"))
     // `keep` columns ride the census (one row per doc) so callers don't
     // re-scan the corpus to join them back — at 100 TB a third corpus
-    // pass for a source label is real money
-    val census = withToks.select(
+    // pass for a source label is real money. The census needs no
+    // partitioning: it meets the grams in the final (doc_id, n) join.
+    val census = docs.select(
       (col("doc_id") +: keep.map(col)) :+
-        length(concat_ws(" ", col("toks"))).cast("long").as("total"): _*)
+        length(concat_ws(" ", tokens(col("text")))).cast("long").as("total"): _*)
+    // the ONE corpus exchange, on the gram leg only: token arrays keyed
+    // by doc_id. The gram census and the (doc, n) reduce both cluster by
+    // doc_id-supersets and reuse this partitioning instead of shuffling
+    // 9× the corpus in gram strings.
+    val withToks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+      .repartition(col("doc_id"))
     val pos = withToks.select(col("doc_id"), col("toks"),
       posexplode(col("toks")).as(Seq("pos", "t")))
     // token at 0-based position pos+i is element_at(toks, pos+i+1);

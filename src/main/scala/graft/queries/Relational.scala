@@ -18,25 +18,12 @@ import graft.sources.Tables
   */
 object Relational {
 
-  /** Exact, order-independent sum of a double measure. */
+  /** Exact, order-independent sum of a double measure. Its DECIMAL(28,6)
+    * buffer holds sums up to 10^22; an (18,2) buffer would overflow past
+    * 10^16 (NULL with ANSI off, an error with ANSI on). */
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double")
   private def davg(c: Column): Column =
     (sum(c.cast(DecimalType(18, 6))) / count(c)).cast("double")
-
-  /** dsum for RAW money/ratio columns that are provably exact 2-dp
-    * values under 10^6 (r19's q_corr_matrix verification, re-checked
-    * r20 for every column this touches at all three SFs: the 2-dp and
-    * 6-dp decimal quantizations of every value are equal, so the exact
-    * sums — and the doubles cast from them — are bit-identical). The
-    * win is the aggregation buffer: SUM over DECIMAL(8,2) carries a
-    * DECIMAL(18,2) buffer, inside Spark's compact long-backed Decimal
-    * (in-place UnsafeRow update), where the (18,6) cast forces a
-    * (28,6) buffer stored as bytes — a JavaBigDecimal allocation per
-    * input row. NOT for derived/product expressions (their 6-dp
-    * quantization is semantic) and not for davg (decimal division
-    * result scale depends on operand precision). */
-  private def dsum2(c: Column): Column =
-    sum(c.cast(DecimalType(8, 2))).cast("double")
 
   /** The 100 TB production form of ANALYZE-style profiling: identical
     * statistics to `q_profile` but NDV via HLL++
@@ -50,18 +37,14 @@ object Relational {
     * PlanRegressionSpec). This is the shape real warehouses' ANALYZE
     * uses for NDV. */
   def profileApprox(df: DataFrame, cols: Seq[String],
-      rsd: Double = 0.02,
-      sumType: DecimalType = DecimalType(18, 6)): DataFrame = {
-    // callers whose measures are provably coarser than 6 dp can narrow
-    // sumType (e.g. (8,2) for exact 2-dp money columns) to keep the sum
-    // buffer in the compact long-backed Decimal — see [[dsum2]]
+      rsd: Double = 0.02): DataFrame = {
     val aggs = cols.flatMap { c => Seq(
       count(col(c)).as(s"${c}_n"),
       sum(col(c).isNull.cast("long")).as(s"${c}_nulls"),
       approx_count_distinct(col(c), rsd).as(s"${c}_ndv"),
       min(col(c)).cast("double").as(s"${c}_min"),
       max(col(c)).cast("double").as(s"${c}_max"),
-      sum(col(c).cast(sumType)).cast("double").as(s"${c}_sum")) }
+      dsum(col(c)).as(s"${c}_sum")) }
     val stackExpr = s"stack(${cols.size}, " + cols.map(c =>
       s"'$c', ${c}_n, ${c}_nulls, ${c}_ndv, ${c}_min, ${c}_max, " +
         s"${c}_sum").mkString(", ") +
@@ -79,8 +62,8 @@ object Relational {
       li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          dsum2(col("l_quantity")).as("sum_qty"),
-          dsum2(col("l_extendedprice")).as("sum_base_price"),
+          dsum(col("l_quantity")).as("sum_qty"),
+          dsum(col("l_extendedprice")).as("sum_base_price"),
           dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
           davg(col("l_quantity")).as("avg_qty"),
           davg(col("l_discount")).as("avg_disc"),
@@ -142,7 +125,7 @@ object Relational {
       Tables.load(s, dir, "orders")
         .agg(
           count(lit(1)).as("n_orders"),
-          dsum2(col("o_totalprice")).as("total"),
+          dsum(col("o_totalprice")).as("total"),
           davg(col("o_totalprice")).as("avg_price"),
           countDistinct(col("o_custkey")).as("n_customers"))
     }),
@@ -163,7 +146,7 @@ object Relational {
         countDistinct(col(c)).as(s"${c}_ndv"),
         min(col(c)).cast("double").as(s"${c}_min"),
         max(col(c)).cast("double").as(s"${c}_max"),
-        dsum2(col(c)).as(s"${c}_sum")) }
+        dsum(col(c)).as(s"${c}_sum")) }
       val stackExpr = s"stack(${cols.size}, " + cols.map(c =>
         s"'$c', ${c}_n, ${c}_nulls, ${c}_ndv, ${c}_min, ${c}_max, " +
           s"${c}_sum").mkString(", ") +
@@ -183,8 +166,7 @@ object Relational {
     "q_profile_approx" -> ((s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val approx = profileApprox(li, cols, rsd = 0.02,
-        sumType = DecimalType(8, 2)) // lossless: 2-dp measures (dsum2)
+      val approx = profileApprox(li, cols, rsd = 0.02)
       val exactAggs = cols.map(c => countDistinct(col(c)).as(s"${c}_ndv"))
       val exactStack = s"stack(${cols.size}, " + cols.map(c =>
         s"'$c', ${c}_ndv").mkString(", ") + ") as (col_name, ndv)"
@@ -211,7 +193,7 @@ object Relational {
         .groupBy(col("o_orderpriority"))
         .agg(
           count(lit(1)).as("n"),
-          dsum2(when(col("o_orderstatus") === "F", col("o_totalprice"))
+          dsum(when(col("o_orderstatus") === "F", col("o_totalprice"))
             .otherwise(lit(0))).as("finished_total"))
         .orderBy(col("o_orderpriority"))
     }),
@@ -268,7 +250,7 @@ object Relational {
       val cust = Tables.load(s, dir, "customer")
       cust.join(broadcast(nation), cust("c_nationkey") === nation("n_nationkey"))
         .rollup(col("n_name"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), dsum2(col("c_acctbal")).as("total_bal"))
+        .agg(count(lit(1)).as("n"), dsum(col("c_acctbal")).as("total_bal"))
         .orderBy(col("n_name").asc_nulls_first, col("c_mktsegment").asc_nulls_first)
     }),
 
@@ -375,7 +357,7 @@ object Relational {
       val li = Tables.load(s, dir, "lineitem")
       val ord = Tables.load(s, dir, "orders")
       val big = li.groupBy(col("l_orderkey").as("big_ok"))
-        .agg(dsum2(col("l_quantity")).as("total_qty"))
+        .agg(dsum(col("l_quantity")).as("total_qty"))
         .filter(col("total_qty") > 200)
       ord.join(big, ord("o_orderkey") === col("big_ok"))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("total_qty"))
@@ -495,7 +477,7 @@ object Relational {
     "q_events_by_day" -> ((s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("total_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
         .orderBy(col("day"), col("event_type"))
     }),
 
@@ -510,7 +492,7 @@ object Relational {
       val ev = Tables.load(s, dir, "events")
       val daily = ev
         .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("day_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("day_value"))
       val days = ev.agg(min(to_date(col("ts"))).as("d0"),
           max(to_date(col("ts"))).as("d1"))
         .select(explode(sequence(col("d0"), col("d1"))).as("d"))
@@ -609,7 +591,7 @@ object Relational {
         .rangeBetween(Window.unboundedPreceding, 0L)
       val wOld = Window.partitionBy(col("user_id")).orderBy(col("sec"))
         .rangeBetween(Window.unboundedPreceding, -604801L)
-      val vq = col("value").cast(DecimalType(8, 2))
+      val vq = col("value").cast(DecimalType(18, 6))
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           expr("ts_nanos div 1000000000").as("sec"))
@@ -617,7 +599,7 @@ object Relational {
           count(lit(1)).over(wCum) - count(lit(1)).over(wOld))
         .withColumn("val_7d",
           (sum(vq).over(wCum) -
-            coalesce(sum(vq).over(wOld), lit(0).cast(DecimalType(8, 2))))
+            coalesce(sum(vq).over(wOld), lit(0).cast(DecimalType(18, 6))))
             .cast("double"))
         .select(col("event_id"), col("user_id"), col("n_7d"),
           round(col("val_7d"), 6).as("val_7d"))
@@ -664,7 +646,9 @@ object Relational {
       // inside Spark's compact long-backed Decimal representation,
       // instead of (38,12) which forces JavaBigDecimal allocation per
       // row per aggregate. The sums are exact either way; the doubles
-      // cast from them are bit-identical.
+      // cast from them are bit-identical. The plain sums go through
+      // dsum: SUM over (8,2) would keep an (18,2) buffer, which
+      // overflows past 10^16.
       val e = Tables.load(s, dir, "lineitem").select(
         cols.map(c => col(c).cast(DecimalType(8, 2)).as(c)): _*)
       val pairs = for {
@@ -672,7 +656,7 @@ object Relational {
       } yield (cols(i), cols(j))
       val moments = e.agg(
         count(lit(1)).as("n"),
-        (cols.map(c => sum(col(c)).cast("double").as(s"sx_$c")) ++
+        (cols.map(c => dsum(col(c)).as(s"sx_$c")) ++
          cols.map(c => sum(col(c) * col(c)).cast("double").as(s"sxx_$c")) ++
          pairs.map { case (a, b) =>
            sum(col(a) * col(b)).cast("double").as(s"sxy_${a}_$b") }): _*)
@@ -729,12 +713,12 @@ object Relational {
       val e = Tables.load(s, dir, "events")
         .select(col("event_type"), col("value"),
           // (8,2) is lossless for `value` (2-dp, verified at 3 SFs) and
-          // keeps sum(vq) in the compact long-backed buffer; vq*vq is
-          // exact 4-dp either way, so sx/sxx are bit-identical
+          // keeps vq*vq at (17,4), in the compact long-backed Decimal;
+          // sx goes through dsum, whose buffer holds past 10^16
           col("value").cast(DecimalType(8, 2)).as("vq"))
       val stats = e.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("vq")).cast("double").as("sx"),
+          dsum(col("vq")).as("sx"),
           sum(col("vq") * col("vq")).cast("double").as("sxx"))
         .withColumn("mean", col("sx") / col("n"))
         .withColumn("sigma",

@@ -8,6 +8,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
 import graft.exec.Executor
 
 /** PostgreSQL wire protocol (v3) front end for the engine — the surface
@@ -1664,16 +1665,9 @@ object PgServeMain {
     val bind = args.drop(2).headOption.filter(_.nonEmpty)
       .map(InetAddress.getByName)
       .getOrElse(InetAddress.getLoopbackAddress)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-pg-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
+    // SPARK_GRAFT_MASTER points the server at a cluster instead
+    val b = GraftSession.builder(GraftSession.cpus).appName("graft-pg-server")
+    val spark = sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = new PgWireServer(spark, port = port, scopeSpecPath = spec,
       bindAddress = bind)

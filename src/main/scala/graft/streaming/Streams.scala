@@ -776,11 +776,6 @@ object Streams {
         .start()
       try {
         q.processAllAvailable()
-        // per-batch duration breakdown (triggerExecution, addBatch,
-        // state commit) for bench forensics — r5's st_* medians moved
-        // 8-13× with unchanged plans and this is how to see where
-        if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-          q.recentProgress.foreach(p => System.err.println(p.json))
         val emitted = q.recentProgress.toSeq
           .map(p => Option(p.sink).map(_.numOutputRows).getOrElse(-1L))
         emissionLog.synchronized {

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph, KMeans, Retrieval, Similarity, TextAnalysis}
+import graft.GraftSession
 import graft.sources.Tables
 import graft.streaming.Streams
 
@@ -31,20 +32,11 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val runs = if (args.nonEmpty) args(0).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factors = Seq(1, 2, 4, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleprobe")
-      // production session wiring: the automatic skipping/metadata rules
-      // must be active or the skip_* probes measure the wrong engine
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // production session wiring: the automatic skipping/metadata rules
+    // must be active or the skip_* probes measure the wrong engine
+    val spark = GraftSession.builder(GraftSession.cpus)
+      .appName("graft-scaleprobe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = Tables.load(spark, sfDir, "documents")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -11,12 +11,8 @@ import graft.sources.Tables
   * low" failure mode from "ADC/refine too lossy". */
 object TuneIvfPq {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-tune")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus)
+      .appName("graft-tune").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (sf <- Seq("0.1")) {
       val dir = s"/root/testdata/sf$sf"

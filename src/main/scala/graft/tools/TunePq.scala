@@ -1,19 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.operators.Similarity
 import graft.sources.Tables
 
 /** Dev tool: sweep knnPq refine against the in-plan brute-force top-10. */
 object TunePq {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-tunepq")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus)
+      .appName("graft-tunepq").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (sf <- Seq("0.001", "0.01", "0.1")) {
       val dir = s"/root/testdata/sf$sf"

@@ -128,7 +128,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("sub-scheduling-floor queries are never flagged suspect") {
     // a 20 ms query can show 2-3x relative spread from pure scheduling
-    // noise (FloorProbe: the bare-job floor is ~150 ms) — that is not
+    // noise (a bare range(1).count() job floors at ~150 ms) — that is not
     // ambient load and must not flag, rerun, or fail isolation
     var i = 0
     val delays = Vector(50L, 10L, 30L, 12L, 35L)

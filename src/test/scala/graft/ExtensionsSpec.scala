@@ -18,6 +18,12 @@ class ExtensionsSpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without queries: ${o -- q}")
   }
 
+  test("the test session is GraftSession's: GraftExtensions, UTC") {
+    assert(spark.conf.get("spark.sql.extensions") ==
+      "org.apache.spark.sql.graft.GraftExtensions" &&
+      spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("DISTINCT ON keeps first row per key under ORDER BY") {
     val exec = new Executor(spark, Map(
       "t" -> Seq((0, 1, "a"), (0, 2, "b"), (1, 3, "c"), (1, 1, "d"))

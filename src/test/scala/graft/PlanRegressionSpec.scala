@@ -258,6 +258,12 @@ class PlanRegressionSpec extends AnyFunSuite {
     // lines: FormattedMode prints every node twice (tree + details).
     val scans = "\\(\\d+\\) Scan parquet".r.findAllIn(p).size
     assert(scans <= 2, s"documents scanned $scans times (fan-out regression)")
+    // the doc_id repartition belongs to the gram leg alone: a second
+    // REPARTITION_BY_COL exchange means the census leg shuffles the
+    // corpus too (ReuseExchange cannot merge the two differently
+    // projected legs)
+    val byCol = "REPARTITION_BY_COL".r.findAllIn(p).size
+    assert(byCol <= 1, s"$byCol corpus repartition exchanges (expected one)")
   }
 
   test("km_embed: literal-centroid assignment, pruned scan, broadcast summary join") {

@@ -2,21 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites: the production wiring
+  * ([[GraftSession]]) on four cores — also inherited by every session
+  * the Spark Connect service spawns for remote clients (ConnectSpec). */
 object TestSpark {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production wiring (native expressions + the graft_sql
-      // dialect gateway) — also inherited by every session the Spark
-      // Connect service spawns for remote clients (ConnectSpec)
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -19,9 +19,8 @@ object CacheProbe {
   * inside DFP key-collection job groups while `body` runs — the direct
   * observable for "a memoized decline must not re-pay the collection
   * on a recompile" (r17 ADVICE: the covering-range decline previously
-  * left no memo, so every fixed-point iteration re-collected). Lives
-  * under org.apache.spark so it can drain the private[spark]
-  * listener bus deterministically before reading the count. */
+  * left no memo, so every fixed-point iteration re-collected). Drains
+  * the listener bus ([[ListenerBusProbe]]) before reading the count. */
 object DfpProbe {
   def dfpJobsDuring(spark: org.apache.spark.sql.SparkSession)(
       body: => Unit): Int = {
@@ -37,16 +36,8 @@ object DfpProbe {
       }
     }
     sc.addSparkListener(l)
-    try { body; sc.listenerBus.waitUntilEmpty(30000L) }
+    try { body; ListenerBusProbe.drain(spark) }
     finally sc.removeSparkListener(l)
     counter.get()
   }
-}
-
-/** Test-only bridge into the private[spark] listener bus: blocks until
-  * every event posted so far has been delivered to every listener, so a
-  * count kept by a test's SparkListener is final when read. */
-object ListenerBusProbe {
-  def drain(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
