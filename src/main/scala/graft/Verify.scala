@@ -48,7 +48,7 @@ object Verify {
       try {
         val out = s"$outDir/$name"
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out)
-        try assertInt64(name, spark.read.parquet(out))
+        try assertInt64(name, graft.sources.Tables.readParquet(spark, out))
         catch { case e: IllegalStateException =>
           // delete the output so the local DuckDB sweep shows a missing
           // (red) row instead of a value-equal comparison that the

@@ -598,9 +598,11 @@ final class Executor(val spark: SparkSession,
           s"OPTIMIZE: refusing to rewrite '$p' in place — it was attached " +
           "from existing storage, not written by this session; re-create " +
           "the table WITH (persist 'parquet') to take ownership")
-      // parquet backing is required (the rewrite machinery is parquet);
-      // probe one footer BEFORE any rename touches the directory
-      try spark.read.parquet(p).schema
+      // parquet backing is required (the rewrite machinery is parquet):
+      // resolve the schema BEFORE any rename touches the directory. The
+      // reader takes it from one footer on the driver; a footer it cannot
+      // read goes to Spark's inference, whose error lands here
+      try graft.sources.Tables.readParquet(spark, p).schema
       catch {
         case e: Exception =>
           throw CompileException(
@@ -896,7 +898,7 @@ final class Executor(val spark: SparkSession,
     * extension. */
   private def readSource(p: String, options: Map[String, String]): DataFrame =
     options.getOrElse("format", "csv").toLowerCase match {
-      case "parquet" => spark.read.parquet(p)
+      case "parquet" => graft.sources.Tables.readParquet(spark, p)
       case "orc" => spark.read.orc(p)
       // Spark's json source IS line-delimited by default; 'jsonl'
       // accepted as the explicit name a pipeline user reaches for

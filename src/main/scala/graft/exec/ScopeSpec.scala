@@ -33,7 +33,7 @@ object ScopeSpec {
         val full = if (p.startsWith("/")) p else s"$basepath/$p"
         val df =
           if (p.endsWith(".csv")) exec.tableFunctions.readCsv(full, Map.empty)
-          else spark.read.parquet(full)
+          else graft.sources.Tables.readParquet(spark, full)
         // path-backed attach: picks up sidecar ANALYZE stats if present
         exec.attachFromPath(e.getKey, df, full)
       }

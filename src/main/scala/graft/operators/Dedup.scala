@@ -583,7 +583,7 @@ object Dedup {
         blocklist.select(lit(0L).as("doc_id"), col("text")), k)
       .select(col("s")).distinct()
       .write.mode("overwrite").parquet(s"$path/shingles")
-    val shT = spark.read.parquet(s"$path/shingles")
+    val shT = Tables.readParquet(spark, s"$path/shingles")
     val bloom = shT.stat.bloomFilter("s", math.max(shT.count(), 1000L), fpp)
     val hp = new org.apache.hadoop.fs.Path(s"$path/bloom.bin")
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -601,7 +601,7 @@ object Dedup {
   def bloomContaminationFromArtifact(corpus: DataFrame, path: String,
       k: Int = 8): DataFrame = {
     val spark = corpus.sparkSession
-    val shT = spark.read.parquet(s"$path/shingles")
+    val shT = Tables.readParquet(spark, s"$path/shingles")
     val hp = new org.apache.hadoop.fs.Path(s"$path/bloom.bin")
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val is = fs.open(hp)
@@ -1245,7 +1245,7 @@ object Dedup {
             expr("substring(text, 1, (4 * length(text)) div 5)").as("text")))
       val tmp = java.nio.file.Files.createTempDirectory("graft_lshidx").toString
       buildLshIndex(corpus).write.mode("overwrite").parquet(tmp)
-      dedupAgainstLshIndex(s.read.parquet(tmp), batch, minAgree = 0.5)
+      dedupAgainstLshIndex(Tables.readParquet(s, tmp), batch, minAgree = 0.5)
         .orderBy(col("batch_doc"))
     }),
     // Bloom-prefiltered exact 8-gram decontamination: blocklist = src0,

@@ -613,7 +613,7 @@ object Similarity {
           "separate cells/ and books/ tables; an index in the old layout " +
           "(or no index at all) cannot be loaded. Rebuild it with " +
           "buildIvfPqIndex.")
-    val rows = spark.read.parquet(modelPath.toString).collect()
+    val rows = Tables.readParquet(spark, modelPath.toString).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
         r.getSeq[Double](3).toArray))
     val cells = rows.filter(_._1 == 0).sortBy(_._2).map(_._4)
@@ -639,7 +639,7 @@ object Similarity {
     val (qBase, qSide) = ivfPqQuerySide(queries, model, nProbe)
     val probed = qSide.select(col("__cell")).distinct()
       .collect().map(_.getInt(0))
-    val coded = spark.read.parquet(s"$path/codes")
+    val coded = Tables.readParquet(spark, s"$path/codes")
       .filter(col("__cell").isin(probed.map(Int.box): _*))
     val cand = coded.join(broadcast(qSide), "__cell")
     refineTopK(adcScore(cand, model.codebookSize), qBase, k, refine)

@@ -135,7 +135,7 @@ object Sketches {
       .agg(expr("hll_sketch_agg(user_id)").as("sk"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_sketch").toString
     cells.write.mode("overwrite").parquet(tmp)
-    val rolled = spark.read.parquet(tmp)
+    val rolled = Tables.readParquet(spark, tmp)
       .groupBy(col("event_type"))
       .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("__est"),
         count(lit(1)).as("n_days"))

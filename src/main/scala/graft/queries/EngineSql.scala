@@ -559,7 +559,7 @@ object EngineSql {
           (path, files.size, files.count(_.startsWith("event_type=click/")))
         }
         GateTimings.timed("ix_partition_skip", "probe") {
-          def q = s.read.parquet(p)
+          val q = Tables.readParquet(s, p)
             .filter(col("event_type") === "click" &&
               col("uid_bucket").between(10, 19))
             .agg(count(lit(1)).as("n"),
@@ -568,10 +568,10 @@ object EngineSql {
                 .cast("double").as("sum_value"),
               min(col("event_id")).as("min_id"),
               max(col("event_id")).as("max_id"))
-          val nf = Skipping.scannedFiles(q)
-          GateTimings.materialize(
-            q.withColumn("partition_pruned", lit(inPt < total && nf <= inPt))
-              .withColumn("file_pruned", lit(nf * 2 <= inPt)))
+          val (rows, nf) = Skipping.collectScanned(q)
+          GateTimings.withFlags(q, rows,
+            "partition_pruned" -> (inPt < total && nf <= inPt),
+            "file_pruned" -> (nf * 2 <= inPt))
         }
       }),
       // statistics → plan choice end-to-end: CTAS a derived dimension

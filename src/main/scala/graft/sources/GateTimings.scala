@@ -1,5 +1,8 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.BooleanType
+
 /** Build/probe sub-timings for the lifecycle-heavy driver gates.
   *
   * The ix_ and fq_optimize gates rewrite a full table (CTAS, Z-order,
@@ -31,11 +34,20 @@ object GateTimings {
   /** Execute the (small, already-aggregated) frame NOW and re-wrap the
     * rows so the caller's later materialization is free — the probe
     * phase must run inside the gate for its timing to mean anything. */
-  def materialize(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val rows = df.collect()
+  def materialize(df: DataFrame): DataFrame = withFlags(df, df.collect())
+
+  /** `rows`, already collected from `df`, re-wrapped with one constant
+    * non-null boolean column appended per flag: a gate that collected
+    * its probe to measure it (e.g. the files it opened) answers from
+    * those rows instead of running the probe a second time. */
+  def withFlags(df: DataFrame, rows: Array[Row],
+      flags: (String, Boolean)*): DataFrame = {
+    val schema = flags.foldLeft(df.schema) { case (s, (name, _)) =>
+      s.add(name, BooleanType, nullable = false)
+    }
+    val flagged = rows.map(r => Row.fromSeq(r.toSeq ++ flags.map(_._2)))
     df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
+      java.util.Arrays.asList(flagged: _*), schema)
   }
 
   /** (gate, phase) -> recorded seconds, oldest first. */

@@ -212,7 +212,7 @@ object Sinks {
     // `writeStaged` closure may not — and a closure that throws
     // "path already exists" on every replay wedges its stream permanently.
     if (fs.exists(ps)) fs.delete(ps, true)
-    val df0 = spark.read.parquet(path)
+    val df0 = Tables.readParquet(spark, path)
     val df = fold(excludeEpoch match {
       case Some(e) => df0.filter(!input_file_name().contains(s"epoch-$e-"))
       case None => df0

@@ -317,8 +317,8 @@ object Skipping {
     // the identity the driver listed just before statting — joined back
     // onto the tiny per-file aggregate (one row per file on both sides)
     val identity = files.toDF("file", "bytes", "mtime")
-    val src = spark.read.option("basePath", tableRoot)
-      .parquet(files.map(f => s"$tableRoot/${f._1}"): _*)
+    val src = Tables.readParquet(spark,
+      files.map(f => s"$tableRoot/${f._1}"), Map("basePath" -> tableRoot))
     // numeric indexed columns also carry a per-file sum (the
     // sum/avg metadata-aggregate input) — eligibility read off the
     // resolved scan schema, so hive partition columns qualify too
@@ -466,7 +466,7 @@ object Skipping {
       path: String): Option[DataFrame] =
     if (!Sinks.hasVisibleData(spark, manifestPath(path))) None
     else
-      try Some(spark.read.parquet(manifestPath(path)))
+      try Some(Tables.readParquet(spark, manifestPath(path)))
       catch { case _: Exception => None }
 
   /** Full manifest (re)build: stat every current data file. The listing
@@ -879,9 +879,9 @@ object Skipping {
           val dir = bloomColPath(path, c)
           if (visibleParquetCount(spark, dir) > manifestFoldSegments)
             try {
-              val live = spark.read.parquet(manifestPath(path))
+              val live = Tables.readParquet(spark, manifestPath(path))
                 .select("file", "bytes", "mtime")
-              val kept = spark.read.parquet(dir)
+              val kept = Tables.readParquet(spark, dir)
                 .join(live, Seq("file", "bytes", "mtime"), "left_semi")
                 .dropDuplicates("file")
               val bParts = math.max(1L, f.getContentSummary(new Path(dir))
@@ -3121,7 +3121,7 @@ object Skipping {
             cached.bloomCols.toSeq.sorted.foreach { c =>
               val dir = bloomColPath(path, c)
               if (Sinks.hasVisibleData(spark, dir))
-                spark.read.parquet(dir)
+                Tables.readParquet(spark, dir)
                   .select("file", "bytes", "mtime", "bloom")
                   .collect().foreach { r =>
                     if (!r.isNullAt(3) && ident.get(r.getString(0))
@@ -3213,7 +3213,7 @@ object Skipping {
         val dir = bloomColPath(path, c)
         if (!Sinks.hasVisibleData(spark, dir)) Nil
         else
-          try spark.read.parquet(dir)
+          try Tables.readParquet(spark, dir)
             .join(liveIds, Seq("file", "bytes", "mtime"))
             .dropDuplicates("file")
             .filter(miss(col("bloom"), typedlit(hs)))
@@ -3288,7 +3288,7 @@ object Skipping {
   def readSkipping(spark: SparkSession, path: String,
       preds: Seq[Pred]): DataFrame = {
     val (kept, _) = prunedFiles(spark, path, preds)
-    val full = spark.read.parquet(path)
+    val full = Tables.readParquet(spark, path)
     val base =
       if (kept.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -3491,8 +3491,14 @@ object Skipping {
   /** Files actually opened by `df`'s parquet scans, from the executed
     * plan's `numFiles` metrics (AQE-unwrapped) — the measurement behind
     * the automatic-pruning gates. Executes the frame. */
-  def scannedFiles(df: DataFrame): Long = {
-    df.collect()
+  def scannedFiles(df: DataFrame): Long = collectScanned(df)._2
+
+  /** `df`'s rows and [[scannedFiles]] from one execution: a gate that
+    * measures its probe answers from these rows
+    * ([[GateTimings.withFlags]]) instead of running the probe twice. */
+  def collectScanned(df: DataFrame)
+      : (Array[org.apache.spark.sql.Row], Long) = {
+    val rows = df.collect()
     def walk(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -3501,10 +3507,10 @@ object Skipping {
         walk(q.plan)
       case other => other +: other.children.flatMap(walk)
     }
-    walk(df.queryExecution.executedPlan).collect {
+    (rows, walk(df.queryExecution.executedPlan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.metrics.get("numFiles").map(_.value).getOrElse(0L)
-    }.sum
+    }.sum)
   }
 
   // ------------------------------------------------- driver-gated queries
@@ -3645,15 +3651,14 @@ object Skipping {
         (t, dataFiles(s, t).size)
       }
       GateTimings.timed("ix_auto_skip", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .filter(col("uid_bucket").between(5, 9) &&
             col("value").between(100.0, 200.0))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("pruning_effective", lit(nf * 2 <= total)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "pruning_effective" -> (nf * 2 <= total))
       }
     }),
     // bloom-sidecar point lookups: event_id is HIGH-CARDINALITY and the
@@ -3690,15 +3695,14 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_agg", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .agg(count(lit(1)).as("n"), count(col("value")).as("n_vals"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"),
             min(col("event_type")).as("min_type"),
             max(col("event_type")).as("max_type"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // FILTERED metadata aggregate: the filter column is constant per
@@ -3713,14 +3717,13 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_filter", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .filter(col("event_type") === "click")
           .agg(count(lit(1)).as("n"), count(col("value")).as("n_vals"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // metadata-only SUM/AVG: per-file exact sums ride the manifest, so
@@ -3735,16 +3738,15 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_sum", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .agg(count(lit(1)).as("n"),
             sum(col("event_id")).as("sum_id"),
             sum(col("uid_bucket")).as("sum_bucket"),
             avg(col("event_id")).as("avg_id"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // metadata-only GROUP BY over a FILE-CONSTANT key (hive layout):
@@ -3759,15 +3761,14 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_group", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("user_id")).as("sum_uid"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // metadata-only COUNT(DISTINCT): both the grouping key and the
@@ -3784,14 +3785,13 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_distinct", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .groupBy(col("event_type"))
           .agg(countDistinct(col("uid_bucket")).as("n_buckets"),
             count(lit(1)).as("n"),
             max(col("event_id")).as("max_id"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // metadata-only count(DISTINCT) over a NON-file-constant column:
@@ -3811,14 +3811,13 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_ndv", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .agg(countDistinct(col("uid_bucket")).as("n_buckets"),
             count(lit(1)).as("n"),
             min(col("uid_bucket")).as("min_bucket"),
             max(col("uid_bucket")).as("max_bucket"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // per-file HLL register sketches: approx count(DISTINCT) answered
@@ -3844,7 +3843,7 @@ object Skipping {
           Seq(EqPred("event_type", "click")),
           Map("event_type" ->
             org.apache.spark.sql.types.StringType)).getOrElse(-1L)
-        val q = s.read.parquet(tmp).agg(
+        val q = Tables.readParquet(s, tmp).agg(
           countDistinct(col("uid_bucket")).as("n_buckets"),
           countDistinct(when(col("event_type") === "click",
             col("uid_bucket"))).as("n_buckets_click"))
@@ -3878,18 +3877,17 @@ object Skipping {
         sys.props("graft.skipping.statsDriverMaxBytes") = "1"
         try {
           evictTable(tmp)
-          val hi = s.read.parquet(tmp)
+          val hi = Tables.readParquet(s, tmp)
             .agg(max(col("event_id"))).head().getLong(0)
-          val q = s.read.parquet(tmp)
+          val q = Tables.readParquet(s, tmp)
             .filter(col("event_id") > hi - hi / 8)
             .agg(count(lit(1)).as("n"),
               min(col("event_id")).as("min_id"),
               max(col("event_id")).as("max_id"))
-          val nf = scannedFiles(q)
-          GateTimings.materialize(q
-            .withColumn("cap_pruned", lit(nf * 2 <= total))
-            .withColumn("nothing_cached",
-              lit(!cachedTables.contains(tmp))))
+          val (rows, nf) = collectScanned(q)
+          GateTimings.withFlags(q, rows,
+            "cap_pruned" -> (nf * 2 <= total),
+            "nothing_cached" -> !cachedTables.contains(tmp))
         } finally {
           sys.props.remove("graft.skipping.statsDriverMaxBytes")
           evictTable(tmp)
@@ -3922,22 +3920,20 @@ object Skipping {
           evictTable(tmp)
           val est = metadataApproxDistinct(s, tmp, "uid_bucket")
             .getOrElse(-1L)
-          val q = s.read.parquet(tmp)
+          val q = Tables.readParquet(s, tmp)
             .agg(countDistinct(col("uid_bucket")).as("n_buckets"),
               count(lit(1)).as("n"),
               sum(col("event_id")).as("sum_id"),
               min(col("uid_bucket")).as("min_bucket"),
               max(col("uid_bucket")).as("max_bucket"))
-          val nf = scannedFiles(q)
-          GateTimings.materialize(q
-            .withColumn("metadata_only", lit(nf == 0))
-            .withColumn("hll_answered", lit(est >= 0L))
-            .withColumn("within_tol",
-              lit(est >= 0L) &&
-                abs(lit(est) - col("n_buckets")) <=
-                  greatest(lit(0.05) * col("n_buckets"), lit(1.0)))
-            .withColumn("nothing_cached",
-              lit(!cachedTables.contains(tmp))))
+          val (rows, nf) = collectScanned(q)
+          val nBuckets = rows.head.getAs[Long]("n_buckets")
+          GateTimings.withFlags(q, rows,
+            "metadata_only" -> (nf == 0),
+            "hll_answered" -> (est >= 0L),
+            "within_tol" -> (est >= 0L &&
+              math.abs(est - nBuckets) <= math.max(0.05 * nBuckets, 1.0)),
+            "nothing_cached" -> !cachedTables.contains(tmp))
         } finally {
           sys.props.remove("graft.skipping.statsDriverMaxBytes")
           evictTable(tmp)
@@ -3962,14 +3958,13 @@ object Skipping {
         sys.props("graft.skipping.statsDriverMaxBytes") = "1"
         try {
           evictTable(tmp)
-          val q = s.read.parquet(tmp)
+          val q = Tables.readParquet(s, tmp)
             .select(col("event_id"), col("user_id"), col("value"))
             .orderBy(col("event_id").desc).limit(100)
-          val nf = scannedFiles(q)
-          GateTimings.materialize(q
-            .withColumn("topk_pruned", lit(nf * 2 <= total))
-            .withColumn("nothing_cached",
-              lit(!cachedTables.contains(tmp))))
+          val (rows, nf) = collectScanned(q)
+          GateTimings.withFlags(q, rows,
+            "topk_pruned" -> (nf * 2 <= total),
+            "nothing_cached" -> !cachedTables.contains(tmp))
         } finally {
           sys.props.remove("graft.skipping.statsDriverMaxBytes")
           evictTable(tmp)
@@ -3991,12 +3986,11 @@ object Skipping {
         (t, dataFiles(s, t).size)
       }
       GateTimings.timed("ix_topk_scan", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .select(col("event_id"), col("user_id"), col("value"))
           .orderBy(col("event_id").desc).limit(100)
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("topk_pruned", lit(nf * 2 <= total)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "topk_pruned" -> (nf * 2 <= total))
       }
     }),
     // FILTERED top-k: WHERE pred ORDER BY c DESC LIMIT k — the bound
@@ -4013,15 +4007,14 @@ object Skipping {
         (t, dataFiles(s, t).size)
       }
       GateTimings.timed("ix_topk_filter", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .filter(col("event_type") === "click")
           .select(col("event_id"), col("user_id"), col("value"))
           .orderBy(col("event_id").desc).limit(50)
-        val nf = scannedFiles(q)
+        val (rows, nf) = collectScanned(q)
         // stricter than the partition filter alone can satisfy (the
         // pred keeps 1-in-5 of the files): proves the BOUND pruned
-        GateTimings.materialize(
-          q.withColumn("topk_pruned", lit(nf * 8 <= total)))
+        GateTimings.withFlags(q, rows, "topk_pruned" -> (nf * 8 <= total))
       }
     }),
     // PER-PARTITION top-k: row_number() OVER (PARTITION BY type ORDER
@@ -4040,14 +4033,13 @@ object Skipping {
       GateTimings.timed("ix_topk_group", "probe") {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type").orderBy(col("event_id").desc)
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 20)
           .select(col("event_type"), col("event_id"), col("user_id"),
             col("rn"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("topk_pruned", lit(nf * 2 <= total)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "topk_pruned" -> (nf * 2 <= total))
       }
     }),
     // GROUPED chain count(DISTINCT): the grouping key is file-constant
@@ -4066,14 +4058,13 @@ object Skipping {
         t
       }
       GateTimings.timed("ix_meta_ndv_group", "probe") {
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .groupBy(col("event_type"))
           .agg(countDistinct(col("uid_bucket")).as("n_buckets"),
             count(lit(1)).as("n"),
             max(col("uid_bucket")).as("max_bucket"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("metadata_only", lit(nf == 0)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "metadata_only" -> (nf == 0))
       }
     }),
     // PER-PARTITION top-k by dense_rank: k DISTINCT values per group,
@@ -4093,14 +4084,13 @@ object Skipping {
       GateTimings.timed("ix_topk_dense", "probe") {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type").orderBy(col("event_id").desc)
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .withColumn("dr", dense_rank().over(w))
           .filter(col("dr") <= 20)
           .select(col("event_type"), col("event_id"), col("user_id"),
             col("dr"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("topk_pruned", lit(nf * 2 <= total)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "topk_pruned" -> (nf * 2 <= total))
       }
     }),
     // join-driven dynamic file pruning, in-memory dim: the dim's
@@ -4121,14 +4111,13 @@ object Skipping {
       GateTimings.timed("ix_dfp_scan", "probe") {
         import s.implicits._
         val dim = Seq(10L, 13L, 17L).toDF("b")
-        val q = s.read.parquet(tmp)
+        val q = Tables.readParquet(s, tmp)
           .join(dim, col("uid_bucket") === col("b"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"))
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("dfp_pruned", lit(nf * 2 <= total)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "dfp_pruned" -> (nf * 2 <= total))
       }
     }),
     // the star shape: a PARQUET dim filtered by its own predicate —
@@ -4149,17 +4138,16 @@ object Skipping {
         (t, d, dataFiles(s, t).size)
       }
       GateTimings.timed("ix_dfp_star", "probe") {
-        val q = s.read.parquet(tmp)
-          .join(s.read.parquet(dimT).filter(col("d_cat") === 3),
+        val q = Tables.readParquet(s, tmp)
+          .join(Tables.readParquet(s, dimT).filter(col("d_cat") === 3),
             col("uid_bucket") === col("d_bucket"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
             min(col("event_id")).as("min_id"),
             max(col("event_id")).as("max_id"))
         // ~10 surviving keys over a 100-bucket/32-file clustered
         // layout: well under half the fact files (+1 dim file)
-        val nf = scannedFiles(q)
-        GateTimings.materialize(
-          q.withColumn("dfp_pruned", lit(nf * 2 <= total + 1)))
+        val (rows, nf) = collectScanned(q)
+        GateTimings.withFlags(q, rows, "dfp_pruned" -> (nf * 2 <= total + 1))
       }
     }),
     // null-count pruning: IS NULL keeps only files that HOLD nulls —

@@ -2,24 +2,44 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the harness-provided parquet star schema (TESTDATA.md).
   *
-  * All reads go through `spark.read.parquet`, so Catalyst pushes filters
-  * and prunes columns down to the scan — at 100 TB the scan cost is the
-  * dominant term and these two properties are what keep it linear in the
-  * columns/rows actually needed, not in table size.
+  * All reads go through [[readParquet]], a plain parquet scan, so
+  * Catalyst pushes filters and prunes columns down to the scan — at
+  * 100 TB the scan cost is the dominant term and these two properties
+  * are what keep it linear in the columns/rows actually needed, not in
+  * table size.
   */
 object Tables {
+  /** `spark.read.options(options).parquet(paths: _*)`, with the schema
+    * read from one footer on the driver instead of by Spark's inference
+    * job ([[FooterSchema]]: the same footer, the same answer). Where
+    * that answer might differ, the read is Spark's own, inference job
+    * and error included. */
+  def readParquet(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String]): DataFrame = {
+    val reader = spark.read.options(options)
+    FooterSchema.infer(spark, paths, options) match {
+      case Some(s) => reader.schema(s).parquet(paths: _*)
+      case None => reader.parquet(paths: _*)
+    }
+  }
+
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, Seq(path), Map.empty)
+
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    // served from the memoized scope: one footer read per (session, dir,
-    // table) for the whole process, not one per query. A dir that is not
-    // a full star schema (scope build fails) degrades to a direct read.
+    // served from the memoized scope: one driver-side footer read per
+    // (session, dir, table) for the whole process, not one per query. A
+    // dir that is not a full star schema (scope build fails) degrades to
+    // a direct read.
     try scope(spark, dir).getOrElse(name, loadUncached(spark, dir, name))
     catch { case _: Exception => loadUncached(spark, dir, name) }
 
@@ -33,7 +53,7 @@ object Tables {
     // operators (as-of/range joins, sessionize) key on. Integer `div` /
     // `* 1000` — a double roundtrip would lose precision at 1e18 ns.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") withTsNanos(df, df.schema("ts").dataType)
     else df
   }
@@ -67,9 +87,10 @@ object Tables {
     * name→DataFrame dict, reference src/framequery/executor/_executor.py:37-96).
     *
     * Memoized per (session, dir): a DataFrame is an immutable plan, and
-    * building this scope costs ten driver-side parquet footer reads —
-    * the dialect queries (`fq_*`) each construct a scope, so without the
-    * memo a bench/verify sweep pays that footer IO hundreds of times.
+    * building this scope costs ten listings and ten footer reads, all on
+    * the driver ([[readParquet]]; no Spark job) — the dialect queries
+    * (`fq_*`) each construct a scope, so without the memo a bench/verify
+    * sweep pays that footer IO hundreds of times.
     * Values re-read the files at every execution as usual; only the
     * schema is pinned, matching the read-only testdata contract. */
   private val scopeCache =

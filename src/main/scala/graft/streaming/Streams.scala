@@ -21,14 +21,15 @@ object Streams {
     * parquet reader reinterprets the bytes and hands back plausible
     * garbage (round-8: µs int64 read as nanos shrank time 1000×, every
     * session collapsed, zero exceptions). So the streaming reads take
-    * their schema FROM the footer via a driver-side batch read — one
-    * footer fetch at plan time, nothing per-batch — and all physical-
-    * type adaptation goes through the same [[Tables.withTsNanos]]
+    * their schema FROM the footer: [[Tables.readParquet]] reads it on
+    * the driver at plan time (Spark's own inference job only where that
+    * reader falls back), nothing per-batch — and all physical-type
+    * adaptation goes through the same [[Tables.withTsNanos]]
     * normalizer the batch path uses. */
   private def footerSchema(spark: SparkSession, dir: String,
       name: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet").schema
+    Tables.readParquet(spark, s"$dir/$name.parquet").schema
   }
 
   /** Streaming read of the events parquet with the (ts, ts_nanos) pair
@@ -359,7 +360,7 @@ object Streams {
         // replay sees exactly the pre-epoch index, like the first try.
         val idx =
           if (graft.sources.Sinks.hasVisibleData(s, indexPath))
-            Some(s.read.parquet(indexPath)
+            Some(Tables.readParquet(s, indexPath)
               .filter(!input_file_name().contains(s"epoch-$epochId-")))
           else None
         idx.foreach { index =>
@@ -722,7 +723,7 @@ object Streams {
     * produced them. */
   def latestCells(spark: SparkSession, dir: String,
       keys: Seq[String]): DataFrame =
-    latestWins(spark.read.parquet(dir), keys).drop("__epoch")
+    latestWins(Tables.readParquet(spark, dir), keys).drop("__epoch")
 
   /** The latest-wins reduction itself, `__epoch` KEPT: each cell's
     * surviving row still carries the epoch that emitted it, so the

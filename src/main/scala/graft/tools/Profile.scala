@@ -108,8 +108,8 @@ object Profile {
       .appName("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
-    // the first read of a table infers its schema with a job: pay it
-    // once here, as Bench's warm-up does, not in the first query's build
+    // build the memoized scope once here, as Bench's warm-up does, so
+    // its listings and footer reads are not in the first query's build
     Tables.scope(spark, sfDir)
     // a query's plan and rows, taken once, after its first run
     def inspect(name: String)(df: DataFrame): Unit = {

@@ -353,7 +353,7 @@ object ScaleProbe {
           Skipping.evictTable(dir)
           val lo = nEv / 2
           val hi = lo + math.max(1L, nEv / 64L)
-          val n = spark.read.parquet(dir)
+          val n = Tables.readParquet(spark, dir)
             .filter(col("idx") >= lo && col("idx") < hi)
             .agg(count(lit(1))).head().getLong(0)
           require(n > 0, "cap probe must keep some rows")
@@ -374,7 +374,7 @@ object ScaleProbe {
         sys.props("graft.skipping.statsDriverMaxBytes") = "1"
         try {
           Skipping.evictTable(dir)
-          val r = spark.read.parquet(dir)
+          val r = Tables.readParquet(spark, dir)
             .agg(count(lit(1)).as("n"), min(col("idx")).as("mn"),
               max(col("idx")).as("mx")).head()
           require(r.getLong(0) > 0L, "oversized meta agg must answer")
@@ -391,7 +391,7 @@ object ScaleProbe {
         sys.props("graft.skipping.statsDriverMaxBytes") = "1"
         try {
           Skipping.evictTable(dir)
-          val n = spark.read.parquet(dir)
+          val n = Tables.readParquet(spark, dir)
             .orderBy(col("idx").desc).limit(100).count()
           require(n == 100L, "oversized top-k must keep 100 rows")
           spark.range(1).toDF("n")
@@ -409,7 +409,8 @@ object ScaleProbe {
       // the control: same predicate, automatic rules opted out via the
       // graft.noskip reader option — a genuine full scan, linear in f
       "skip_scan_full_control" -> (f =>
-        spark.read.option("graft.noskip", "true").parquet(skipFor(f))
+        Tables.readParquet(spark, Seq(skipFor(f)),
+          Map("graft.noskip" -> "true"))
           .where(col("idx") <= nEv / 10)
           .agg(count(lit(1)).as("n"), sum(col("value")).as("s"))),
       // bloom point probe over a growing unpruned-by-intervals... the
@@ -424,7 +425,7 @@ object ScaleProbe {
       // ~flat while rows and file count grow 8x (the scan-based answer
       // would be linear in f)
       "skip_meta_count" -> (f =>
-        spark.read.parquet(skipFor(f))
+        Tables.readParquet(spark, skipFor(f))
           .agg(count(lit(1)).as("n"), min(col("idx")).as("mn"),
             max(col("idx")).as("mx"))),
       // top-k file pruning over a GROWING clustered table: ORDER BY idx
@@ -432,7 +433,7 @@ object ScaleProbe {
       // file(s), so the cost must stay ~flat while rows and file count
       // grow 8× (an unpruned top-k is a linear full scan + heap)
       "skip_topk" -> (f =>
-        spark.read.parquet(skipFor(f))
+        Tables.readParquet(spark, skipFor(f))
           .orderBy(col("idx").desc).limit(100)),
       // per-partition top-k over a growing hive layout: one bound per
       // group keeps each group's tail file(s) — flat while every
@@ -440,7 +441,7 @@ object ScaleProbe {
       "skip_window_topk" -> (f => {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("grp").orderBy(col("idx").desc)
-        spark.read.parquet(wtopkFor(f))
+        Tables.readParquet(spark, wtopkFor(f))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 100)
       }),
@@ -449,7 +450,7 @@ object ScaleProbe {
       // the driver-side fold must stay ~flat while distinct values and
       // file count grow 8x (a scan-based distinct is linear + shuffle)
       "skip_meta_ndv" -> (f =>
-        spark.read.parquet(skipFor(f))
+        Tables.readParquet(spark, skipFor(f))
           .agg(countDistinct(col("idx")).as("nd"),
             count(lit(1)).as("n"))),
       // dense_rank per-partition top-k over the growing hive layout:
@@ -458,7 +459,7 @@ object ScaleProbe {
       "skip_topk_dense" -> (f => {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("grp").orderBy(col("idx").desc)
-        spark.read.parquet(wtopkFor(f))
+        Tables.readParquet(spark, wtopkFor(f))
           .withColumn("dr", dense_rank().over(w))
           .filter(col("dr") <= 100)
       }),
@@ -469,7 +470,7 @@ object ScaleProbe {
       "skip_dfp" -> (f => {
         val dim = spark.range(100)
           .select((col("id") * (nEv / 200L)).as("dk"))
-        spark.read.parquet(skipFor(f))
+        Tables.readParquet(spark, skipFor(f))
           .join(dim, col("idx") === col("dk"))
           .agg(count(lit(1)).as("n"), sum(col("value")).as("s"))
       }),

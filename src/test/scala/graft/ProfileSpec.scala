@@ -10,8 +10,8 @@ class ProfileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
   private val dir = "/root/testdata/sf0.001"
 
-  /** Two runs of one query. The first read of a table infers its schema
-    * with a job; the scope memo makes that a one-time cost, paid here. */
+  /** Two runs of one query, after the memoized scope is built: its
+    * listings and footer reads are a one-time cost, paid here. */
   private def twoRuns(name: String): Seq[Profile.Run] = {
     Tables.scope(spark, dir)
     (1 to 2).map(i => Profile.measure(spark, dir, name, i))

@@ -12,6 +12,26 @@ class StreamingSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private var lastStamp = 0L
+
+  /** Run `write`, an append of parquet files into the stream source
+    * `dir`, and give the files it added an mtime one whole second past
+    * both the clock and every earlier stamp. The file source orders
+    * files by mtime, so each stamped write becomes its own, ordered
+    * batch under maxFilesPerTrigger=1 without waiting for the clock. */
+  private def stamped(dir: String)(write: => Unit): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files = if (!fs.exists(p)) Set.empty[org.apache.hadoop.fs.Path]
+      else fs.listStatus(p).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).toSet
+    val before = files
+    write
+    lastStamp = math.max(lastStamp,
+      System.currentTimeMillis() / 1000 * 1000) + 1000
+    (files -- before).foreach(fs.setTimes(_, lastStamp, -1))
+  }
+
   test("streaming windowed aggregation equals batch aggregation") {
     val streamed = Streams.runToCompletion(spark,
       Streams.windowedCounts(Streams.readEvents(spark, dir)))
@@ -215,10 +235,8 @@ class StreamingSpec extends AnyFunSuite {
       docs.filter(srcNum % 3 === 0),
       docs.filter(srcNum % 3 === 1),
       docs.filter(srcNum % 3 === 2))
-    slices.zipWithIndex.foreach { case (d, i) =>
-      if (i > 0) Thread.sleep(1100)
-      d.coalesce(1).write.mode("append").parquet(inDir)
-    }
+    slices.foreach(d =>
+      stamped(inDir)(d.coalesce(1).write.mode("append").parquet(inDir)))
     // the monitors under test: quality (key source), drift cells
     // (source, lang — the st_drift stream side), and the HLL distinct
     // monitor's mechanics (approx_count_distinct per key)
@@ -280,9 +298,8 @@ class StreamingSpec extends AnyFunSuite {
     val inDir = s"$base/in"; val logDir = s"$base/log"
     ev.filter(unix_timestamp(col("ts")) < cutSec)
       .coalesce(1).write.mode("append").parquet(inDir)
-    Thread.sleep(1100)
-    ev.filter(unix_timestamp(col("ts")) >= cutSec)
-      .coalesce(1).write.mode("append").parquet(inDir)
+    stamped(inDir)(ev.filter(unix_timestamp(col("ts")) >= cutSec)
+      .coalesce(1).write.mode("append").parquet(inDir))
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
     graft.streaming.Streams.runUpdateMonitor(spark,
@@ -317,11 +334,9 @@ class StreamingSpec extends AnyFunSuite {
     // MULTIPLE epochs — each epoch re-emits a higher cumulative count
     // for its touched sources and the latest-wins fold must keep
     // exactly the newest row per cell, not merely concatenate.
-    for (i <- 0 until 6) {
-      if (i > 0) Thread.sleep(1100)
-      docs.filter(col("doc_id") % 6 === i).coalesce(1)
-        .write.mode("append").parquet(inDir)
-    }
+    for (i <- 0 until 6)
+      stamped(inDir)(docs.filter(col("doc_id") % 6 === i).coalesce(1)
+        .write.mode("append").parquet(inDir))
     def run(tag: String, every: Int): String = {
       val logDir = s"$base/log_$tag"
       val stream = spark.readStream.schema(docs.schema)
@@ -373,8 +388,8 @@ class StreamingSpec extends AnyFunSuite {
     val d2 = Seq((100L, "alpha beta gamma delta epsilon zeta"), // copy of 0
       (101L, "completely different words entirely here now")).toDF("doc_id", "text")
     d1.coalesce(1).write.parquet(inDir)
-    Thread.sleep(1100) // distinct mtimes → deterministic batch split
-    d2.coalesce(1).write.mode("append").parquet(inDir)
+    // distinct mtimes → deterministic batch split
+    stamped(inDir)(d2.coalesce(1).write.mode("append").parquet(inDir))
     val stream = spark.readStream
       .schema(d1.schema)
       .option("maxFilesPerTrigger", 1)
@@ -490,8 +505,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = s"$base/in"; val idxDir = s"$base/idx"; val refDir = s"$base/ref"
     // two source files with distinct mtimes → two deterministic batches
     b1.coalesce(1).write.parquet(srcDir)
-    Thread.sleep(1100)
-    b2.coalesce(1).write.mode("append").parquet(srcDir)
+    stamped(srcDir)(b2.coalesce(1).write.mode("append").parquet(srcDir))
     Similarity.buildIvfPqIndex(day0, idxDir, dim = 64, nCells = 16,
       m = 16, codebookSize = 16)
     val stream = spark.readStream.schema(emb.schema)
@@ -528,11 +542,9 @@ class StreamingSpec extends AnyFunSuite {
       .toString
     // six files with distinct mtimes → six epochs; compactEvery = 2
     // means three compaction points (3N-epoch coverage of the knob)
-    for (i <- 0 until 6) {
-      if (i > 0) Thread.sleep(1100)
-      docs.filter(col("doc_id") % 6 === i).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-    }
+    for (i <- 0 until 6)
+      stamped(s"$base/in")(docs.filter(col("doc_id") % 6 === i)
+        .coalesce(1).write.mode("append").parquet(s"$base/in"))
     def ingest(tag: String, every: Int): (String, String) = {
       val idx = s"$base/idx_$tag"; val m = s"$base/m_$tag"
       val stream = spark.readStream.schema(docs.schema)
@@ -586,10 +598,9 @@ class StreamingSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(idxDir + "__old")))
     // the RESTARTED stream (same checkpoint, new docs incl. a copy of
     // doc 0) must RECOVER the survivor, not rebuild from scratch
-    Thread.sleep(1100)
-    Seq((100L, "alpha beta gamma delta epsilon zeta"))
+    stamped(inDir)(Seq((100L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text").coalesce(1)
-      .write.mode("append").parquet(inDir)
+      .write.mode("append").parquet(inDir))
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
     assert(spark.read.parquet(idxDir).select(col("doc_id"))
@@ -663,9 +674,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("checkpointDir"))
     // with the original checkpoint, new data resumes at the next epoch
     // and the latest-wins view equals the full batch aggregate
-    Thread.sleep(1100)
-    Seq(("b", 10L), ("c", 5L)).toDF("k", "v").coalesce(1)
-      .write.mode("append").parquet(inDir)
+    stamped(inDir)(Seq(("b", 10L), ("c", 5L)).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(inDir))
     graft.streaming.Streams.runUpdateMonitor(spark, agg(stream()), logDir,
       checkpointDir = Some(ck))
     val epochs = spark.read.parquet(logDir).select(col("__epoch"))
@@ -727,11 +737,9 @@ class StreamingSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 5)
     val base = java.nio.file.Files.createTempDirectory("graft_cadence_pq")
       .toString
-    for (i <- 1 to 4) {
-      if (i > 1) Thread.sleep(1100)
-      emb.filter(col("vec_id") % 5 === i).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-    }
+    for (i <- 1 to 4)
+      stamped(s"$base/in")(emb.filter(col("vec_id") % 5 === i)
+        .coalesce(1).write.mode("append").parquet(s"$base/in"))
     val idxDir = s"$base/idx"; val refDir = s"$base/ref"
     Similarity.buildIvfPqIndex(day0, idxDir, dim = 64, nCells = 16,
       m = 16, codebookSize = 16)
@@ -872,11 +880,9 @@ class StreamingSpec extends AnyFunSuite {
       (col("id") % 50).as("key"), (col("id") % 7).cast("double").as("v"))
     // six source files with distinct mtimes → six epochs at
     // maxFilesPerTrigger=1; compactEvery=3 folds once mid-stream
-    for (i <- 0 until 6) {
-      if (i > 0) Thread.sleep(1100)
-      src.filter(col("id") % 6 === i).coalesce(1)
-        .write.mode("append").parquet(inDir)
-    }
+    for (i <- 0 until 6)
+      stamped(inDir)(src.filter(col("id") % 6 === i).coalesce(1)
+        .write.mode("append").parquet(inDir))
     val stream = spark.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
     val q = Streams.tableIngest(spark, stream, tbl,
